@@ -166,7 +166,9 @@ def parquet_point_value(
     ``filters=`` predicate, so only row groups whose ``key_col``
     min/max statistics admit ``key`` materialize — a large embeddings
     file no longer balloons driver memory for a one-row lookup. The
-    fallback except is NARROW (I/O, Arrow, schema errors) so an
+    fallback except is NARROW (I/O, Arrow, schema errors, and the
+    TypeError/ValueError/OverflowError ``filters=`` raises on a key that
+    does not fit the column's type, e.g. an int beyond int64) so an
     unexpected failure class propagates loudly instead of silently
     degrading to the distributed lookup forever."""
     import os
@@ -188,5 +190,6 @@ def parquet_point_value(
         if t.num_rows != 1:
             return None
         return t[value_col][0].as_py()
-    except (OSError, KeyError, pl.ArrowException):
+    except (OSError, KeyError, TypeError, ValueError, OverflowError,
+            pl.ArrowException):
         return None

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from gus_spark.errors import DuplicateKeyError, NotFoundError, StorageError
 from gus_spark.model.record import add_null_values, parse_record, parse_uri_id
 from gus_spark.model.types import ModelDefinition
+from gus_spark.storage.parquet_store import records_to_df
 
 DEFAULT_STORAGE_FILE = "./data.json.gus"  # json/mod.rs:31
 
@@ -131,11 +132,7 @@ class JsonFileStore:
     def read_df(self, model: ModelDefinition) -> DataFrame:
         """Bridge the JSON store into the analytics surface."""
         data = self.read_db(model)[model.model_name]
-        rows = [
-            tuple(add_null_values(rec, model).get(f) for f in model.field_order)
-            for rec in data.values()
-        ]
-        return self.spark.createDataFrame(rows, model.to_struct_type())
+        return records_to_df(self.spark, data.values(), model)
 
 
 def load_storage_config(path: str) -> dict:

@@ -24,6 +24,21 @@ like a miniature table format:
 - ``compact()`` folds accumulated delta files back into evenly-sized
   files — the maintenance job a real deployment schedules.
 
+Write cost model: a point mutation is ONE Spark write job, plus, for
+PUT/DELETE, the pk-pruned point read that fetches the stored record
+(and for POST the duplicate-key probe, which only runs when some file's
+[lo, hi] admits a new key). Everything else is driver-local:
+
+- record frames are built from an Arrow table (``records_to_df``), which
+  the JVM reads directly — no Python worker starts;
+- a written file's manifest stats (rows, pk min/max) come from its
+  parquet footer, not from a Spark job over the file;
+- a file whose footer carries no pk min/max (e.g. a string pk longer
+  than parquet-mr's 4 KB statistics limit) is manifested with
+  ``lo = hi = None`` and is must-scan for every key;
+- a write whose output has no rows manifests nothing and leaves no
+  data directory behind.
+
 At cluster scale the same layout maps onto Delta Lake / Iceberg; the
 manifest-pointer commit here is the same idea as their atomic metadata
 swap, kept dependency-free for this environment.
@@ -43,8 +58,11 @@ try:  # POSIX-only; on other platforms the store is single-writer by doc
 except ImportError:  # pragma: no cover
     fcntl = None  # type: ignore[assignment]
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gus_spark.errors import DuplicateKeyError, NotFoundError, StorageError
 from gus_spark.model.record import add_null_values, parse_record, parse_uri_id
@@ -125,40 +143,30 @@ class ParquetStore:
 
     # ------------------------------------------------------------------ io
     def _write_data_file(self, df: DataFrame, model: ModelDefinition) -> list[dict]:
-        """Write df as parquet under the table dir; return file entries
-        with per-file pk min/max stats for manifest-level pruning."""
+        """Write df as parquet under the table dir (one Spark job); return
+        file entries with per-file pk min/max stats, read from each
+        file's footer, for manifest-level pruning."""
         table = self._table_dir(model)
         os.makedirs(table, exist_ok=True)
         out = os.path.join(table, f"data-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(out)
-        pk = model.primary_key
         entries = []
         for fname in sorted(os.listdir(out)):
             if not fname.endswith(".parquet"):
                 continue
             path = os.path.join(out, fname)
-            stats = (
-                self.spark.read.parquet(path)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(pk).alias("lo"),
-                    F.max(pk).alias("hi"),
-                )
-                .first()
-            )
-            if stats["n"] == 0:
+            rows, lo, hi = _footer_stats(path, model.primary_key)
+            if rows == 0:
                 # a zero-row file has no stats, so _contains would treat
                 # it as must-scan forever; never manifest it
                 continue
-            entries.append(
-                {
-                    "path": path,
-                    "lo": stats["lo"],
-                    "hi": stats["hi"],
-                    "rows": stats["n"],
-                }
-            )
+            entries.append({"path": path, "lo": lo, "hi": hi, "rows": rows})
+        if not entries:
+            shutil.rmtree(out, ignore_errors=True)
         return entries
+
+    def _scan(self, model: ModelDefinition, paths: list[str]) -> DataFrame:
+        return self.spark.read.schema(model.to_struct_type()).parquet(*paths)
 
     def read_df(
         self, model: ModelDefinition, at: int | None = None
@@ -184,8 +192,8 @@ class ParquetStore:
                 manifest = json.load(fh)
         files = [f["path"] for f in manifest["files"]]
         if not files:
-            return self.spark.createDataFrame([], model.to_struct_type())
-        return self.spark.read.schema(model.to_struct_type()).parquet(*files)
+            return records_to_df(self.spark, [], model)
+        return self._scan(model, files)
 
     def history(self, model: ModelDefinition) -> list[tuple[int, str]]:
         """Committed snapshots as (seq, manifest_name), oldest first."""
@@ -213,12 +221,6 @@ class ParquetStore:
                     os.remove(os.path.join(self._table_dir(model), name))
             self._gc(model)
 
-    def _records_to_df(
-        self, records: Iterable[dict], model: ModelDefinition
-    ) -> DataFrame:
-        rows = [tuple(r.get(f) for f in model.field_order) for r in records]
-        return self.spark.createDataFrame(rows, model.to_struct_type())
-
     # ------------------------------------------------------------------ CRUD
     def create_one(self, model: ModelDefinition, body: str | dict) -> dict:
         """Validate + insert; duplicate pk is an error (json/mod.rs:84-96)."""
@@ -236,18 +238,29 @@ class ParquetStore:
         if len(set(keys)) != len(keys):
             raise DuplicateKeyError("duplicate primary keys within batch")
         with self._write_lock(model):
-            existing = self.read_df(model)
-            # dup check = semi-join against the new keys; at scale this
-            # prunes to files whose [lo,hi] overlaps the inserted keys.
-            clash = existing.filter(F.col(pk).isin(keys)).limit(1).collect()
-            if clash:
-                raise DuplicateKeyError(
-                    f"record with primary key already exists, use PUT to"
-                    f" update (key={clash[0][pk]!r})"
-                )
             manifest = self._current_manifest(model)
+            # dup check = semi-join against the new keys, scanning only
+            # the files whose [lo, hi] may hold one of them; when no
+            # file qualifies no job runs
+            suspects = [
+                f["path"]
+                for f in manifest["files"]
+                if any(_contains(f, k) for k in keys)
+            ]
+            if suspects:
+                clash = (
+                    self._scan(model, suspects)
+                    .filter(F.col(pk).isin(keys))
+                    .select(pk)
+                    .collect()
+                )
+                if clash:
+                    raise DuplicateKeyError(
+                        f"record with primary key already exists, use PUT"
+                        f" to update (key={clash[0][pk]!r})"
+                    )
             new_files = self._write_data_file(
-                self._records_to_df(records, model), model
+                records_to_df(self.spark, records, model), model
             )
             manifest["files"] = manifest["files"] + new_files
             self._commit(model, manifest, op="insert")
@@ -267,8 +280,11 @@ class ParquetStore:
             raise NotFoundError(
                 f"no {model.model_name} with {model.primary_key}={id_str}"
             )
-        df = self.spark.read.schema(model.to_struct_type()).parquet(*candidates)
-        row = df.filter(F.col(model.primary_key) == F.lit(key)).first()
+        row = (
+            self._scan(model, candidates)
+            .filter(F.col(model.primary_key) == F.lit(key))
+            .first()
+        )
         if row is None:
             raise NotFoundError(
                 f"no {model.model_name} with {model.primary_key}={id_str}"
@@ -299,7 +315,8 @@ class ParquetStore:
             for attr in patch_attrs:
                 merged[attr] = supplied[attr]
             merged[model.primary_key] = key  # URI wins (model.rs:85-86)
-            self._rewrite_key(model, key, replacement=merged)
+            self._apply_locked(model, [merged], [])
+            self._gc(model)
         return add_null_values(merged, model)
 
     def delete_one(self, model: ModelDefinition, id_str: str) -> dict:
@@ -307,36 +324,9 @@ class ParquetStore:
         key = parse_uri_id(id_str, model)
         with self._write_lock(model):
             stored = self.read_one(model, id_str)
-            self._rewrite_key(model, key, replacement=None)
+            self._apply_locked(model, [], [key])
+            self._gc(model)
         return stored
-
-    def _rewrite_key(
-        self, model: ModelDefinition, key: Any, replacement: dict | None
-    ) -> None:
-        """Rewrite only the data files whose pk range may contain ``key``;
-        untouched files carry over into the new manifest by reference."""
-        manifest = self._current_manifest(model)
-        keep = [f for f in manifest["files"] if not _contains(f, key)]
-        touched = [f for f in manifest["files"] if _contains(f, key)]
-        new_files = list(keep)
-        if touched:
-            df = self.spark.read.schema(model.to_struct_type()).parquet(
-                *[f["path"] for f in touched]
-            )
-            remain = df.filter(F.col(model.primary_key) != F.lit(key))
-            if replacement is not None:
-                remain = remain.unionByName(
-                    self._records_to_df([replacement], model)
-                )
-            if remain.limit(1).collect():
-                new_files += self._write_data_file(remain, model)
-        elif replacement is not None:
-            new_files += self._write_data_file(
-                self._records_to_df([replacement], model), model
-            )
-        manifest["files"] = new_files
-        self._commit(model, manifest)
-        self._gc(model)
 
     def upsert_many(
         self, model: ModelDefinition, bodies: Iterable[str | dict]
@@ -365,35 +355,40 @@ class ParquetStore:
         deletes = list(deletes or [])
         if not upserts and not deletes:
             return []
-        pk = model.primary_key
-        keys = [r[pk] for r in upserts] + deletes
+        keys = [r[model.primary_key] for r in upserts] + deletes
         if len(set(keys)) != len(keys):
             raise DuplicateKeyError("conflicting keys within change batch")
         with self._write_lock(model):
-            manifest = self._current_manifest(model)
-            touched = [
-                f
-                for f in manifest["files"]
-                if any(_contains(f, k) for k in keys)
-            ]
-            keep = [f for f in manifest["files"] if f not in touched]
-            new_files = list(keep)
-            survivors = None
-            if touched:
-                df = self.spark.read.schema(model.to_struct_type()).parquet(
-                    *[f["path"] for f in touched]
-                )
-                survivors = df.filter(~F.col(pk).isin(keys))
-            if upserts:
-                fresh = self._records_to_df(upserts, model)
-                survivors = (
-                    fresh if survivors is None else survivors.unionByName(fresh)
-                )
-            if survivors is not None:
-                new_files += self._write_data_file(survivors, model)
-            manifest["files"] = new_files
-            self._commit(model, manifest)
+            self._apply_locked(model, upserts, deletes)
         return upserts
+
+    def _apply_locked(
+        self, model: ModelDefinition, upserts: list[dict], deletes: list[Any]
+    ) -> None:
+        """One commit that rewrites only the files whose pk range may
+        hold an affected key — their surviving rows plus ``upserts``, in
+        one write job; untouched files carry over by reference."""
+        pk = model.primary_key
+        keys = [r[pk] for r in upserts] + deletes
+        manifest = self._current_manifest(model)
+        touched = [
+            f for f in manifest["files"] if any(_contains(f, k) for k in keys)
+        ]
+        new_files = [f for f in manifest["files"] if f not in touched]
+        survivors = None
+        if touched:
+            survivors = self._scan(model, [f["path"] for f in touched]).filter(
+                ~F.col(pk).isin(keys)
+            )
+        if upserts:
+            fresh = records_to_df(self.spark, upserts, model)
+            survivors = (
+                fresh if survivors is None else survivors.unionByName(fresh)
+            )
+        if survivors is not None:
+            new_files += self._write_data_file(survivors, model)
+        manifest["files"] = new_files
+        self._commit(model, manifest)
 
     def append_df(
         self,
@@ -542,6 +537,38 @@ class ParquetStore:
 
     def count(self, model: ModelDefinition) -> int:
         return self.read_df(model).count()
+
+
+def records_to_df(
+    spark: SparkSession, records: Iterable[dict], model: ModelDefinition
+) -> DataFrame:
+    """Records (``parse_record``-shaped dicts; a missing attr is null) as
+    a DataFrame of ``model``'s schema, built from an Arrow table the JVM
+    reads directly, so no Python worker starts. The Arrow conversion is
+    type-strict: a value that does not fit its attr's type (an
+    unvalidated record) raises here, before anything is written."""
+    struct = model.to_struct_type()
+    table = pa.Table.from_pylist(list(records), schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
+
+
+def _footer_stats(path: str, pk: str) -> tuple[int, Any, Any]:
+    """(rows, pk min, pk max) of one parquet file from its footer alone.
+    min/max are None when any non-empty row group lacks pk statistics
+    (parquet-mr omits them for values over 4 KB): must-scan."""
+    meta = pq.read_metadata(path)
+    col = [meta.schema.column(i).path for i in range(meta.num_columns)].index(pk)
+    lo = hi = None
+    for g in range(meta.num_row_groups):
+        group = meta.row_group(g)
+        if group.num_rows == 0:
+            continue
+        stats = group.column(col).statistics
+        if stats is None or not stats.has_min_max:
+            return meta.num_rows, None, None
+        lo = stats.min if lo is None else min(lo, stats.min)
+        hi = stats.max if hi is None else max(hi, stats.max)
+    return meta.num_rows, lo, hi
 
 
 def _contains(file_entry: dict, key: Any) -> bool:

@@ -206,11 +206,12 @@ def test_maintain_command_reports_and_compacts(spark, tmp_path, capsys):
     wh = str(tmp_path / "wh")
     registry = ModelRegistry(str(models))
     store = ParquetStore(spark, wh)
-    store.create_many(
-        registry.get("movie"),
-        [{"id": i, "name": f"m{i}"} for i in range(1, 21)],
-    )
-    store.update_one(registry.get("movie"), "10", {"name": "x"})
+    movie = registry.get("movie")
+    store.create_many(movie, [{"id": i, "name": f"m{i}"} for i in range(1, 16)])
+    # one delta file per insert
+    for i in range(16, 21):
+        store.create_one(movie, {"id": i, "name": f"m{i}"})
+    store.update_one(movie, "10", {"name": "x"})
 
     # churn left >4 delta files; a max-files threshold of 4 must
     # trigger compaction (overlap alone is layout-dependent here)

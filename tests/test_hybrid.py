@@ -403,3 +403,21 @@ def test_parquet_point_value_matches_spark_fetch(spark):
     # non-bare / missing paths fall back loudly-by-None
     assert parquet_point_value("/tmp/nope.parquet", "k", 0, "v") is None
     assert parquet_point_value(path, "vec_id", -12345, "embedding") is None
+
+
+def test_parquet_point_value_mistyped_key_falls_back(tmp_path):
+    """A key that does not fit the key column's type makes pyarrow's
+    ``filters=`` raise outside the Arrow exception family (an int beyond
+    int64 raises OverflowError); the point read must return None so the
+    caller falls back to the distributed lookup, not crash."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gus_spark.operators.util import parquet_point_value
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64()),
+                             "v": ["a", "b"]}), path)
+    assert parquet_point_value(path, "k", 2, "v") == "b"
+    for key in (2**64, -(2**63) - 1, "2", 1j):
+        assert parquet_point_value(path, "k", key, "v") is None

@@ -341,3 +341,185 @@ def test_maintain_compacts_only_when_degraded(store, movie_model):
     assert report2["compacted"] is False
     assert store._current_manifest(movie_model)["seq"] == seq_before
     assert store.count(movie_model) == 30
+
+
+# ------------------------------------------------------------ write path
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs ``action`` launches, counted through a job group of
+    its own; the listener bus is drained first so none is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _model(name: str, attributes: dict) -> ModelDefinition:
+    return ModelDefinition.from_json(
+        {
+            "model_name": name,
+            "attributes": attributes,
+            "primary_key": "id",
+            "required": ["id"],
+        }
+    )
+
+
+def test_point_mutations_job_counts(spark, store, movie_model):
+    """On a compacted table a GET is one Spark job and each POST, PUT
+    and DELETE at most two: the write job plus the pk-pruned read. Record
+    frames come from Arrow and manifest stats from parquet footers, so
+    neither adds a job."""
+    store.create_many(
+        movie_model, [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 41)]
+    )
+    store.compact(movie_model, target_files=4)
+    assert _jobs(spark, lambda: store.read_one(movie_model, "7")) <= 1
+    assert _jobs(
+        spark, lambda: store.update_one(movie_model, "7", {"year": 2001})
+    ) <= 2
+    assert _jobs(spark, lambda: store.delete_one(movie_model, "13")) <= 2
+    # 13's file still spans it, so the dup check scans that one file
+    assert _jobs(
+        spark, lambda: store.create_one(movie_model, dict(RECORD, id=13))
+    ) <= 2
+    assert store.read_one(movie_model, "7")["year"] == 2001
+    assert store.count(movie_model) == 40
+
+
+def test_create_dup_check_prunes_to_overlapping_files(spark, store, movie_model):
+    """The duplicate-key probe scans only files whose [lo, hi] may hold a
+    new key: a POST beyond every file's range runs no probe job, just the
+    write."""
+    store.create_many(
+        movie_model, [dict(RECORD, id=i, name=f"m{i}") for i in range(1, 11)]
+    )
+    assert _jobs(
+        spark, lambda: store.create_one(movie_model, dict(RECORD, id=99))
+    ) == 1
+    with pytest.raises(DuplicateKeyError):
+        store.create_one(movie_model, dict(RECORD, id=5))
+    with pytest.raises(DuplicateKeyError):
+        store.create_many(
+            movie_model, [dict(RECORD, id=100), dict(RECORD, id=99)]
+        )
+    assert store.count(movie_model) == 11
+
+
+def test_stat_less_file_is_must_scan(store):
+    """parquet-mr writes no footer min/max for a string over 4 KB, so the
+    file is manifested with lo = hi = None and every lookup, mutation
+    and duplicate check scans it."""
+    model = _model("note", {"id": "String", "body": "String"})
+    big = "k" * 5000
+    store.create_one(model, {"id": big, "body": "b"})
+    (entry,) = store._current_manifest(model)["files"]
+    assert (entry["rows"], entry["lo"], entry["hi"]) == (1, None, None)
+    store.create_one(model, {"id": "a"})
+    with pytest.raises(DuplicateKeyError):
+        store.create_one(model, {"id": big})
+    store.create_one(model, {"id": "b"})
+    assert store.read_one(model, big)["body"] == "b"
+    assert store.update_one(model, big, {"body": "c"})["body"] == "c"
+    assert store.read_one(model, big)["body"] == "c"
+    assert store.delete_one(model, big)["body"] == "c"
+    with pytest.raises(NotFoundError):
+        store.read_one(model, big)
+    assert store.count(model) == 2
+
+
+@pytest.mark.parametrize(
+    "primitive, keys",
+    [
+        ("Integer", [3, -5, 2**62, 7]),
+        ("String", ["b", "a", "é", "Z", "zz"]),
+        ("Float", [1.5, float("nan"), -0.0, 0.0, -3.0]),
+        ("Boolean", [True, False]),
+    ],
+)
+def test_footer_stats_match_spark_aggregate(spark, store, primitive, keys):
+    """Manifest (rows, lo, hi) read from a parquet footer equals Spark's
+    count/min/max over the same file, NaN and -0.0 included."""
+    from pyspark.sql import functions as F
+
+    from gus_spark.storage.parquet_store import records_to_df
+
+    model = _model("thing", {"id": primitive, "n": "Integer"})
+    df = records_to_df(spark, [{"id": k, "n": 1} for k in keys], model)
+    entries = store._write_data_file(df.repartition(2), model)
+    assert entries and sum(e["rows"] for e in entries) == len(keys)
+
+    def same(a, b):
+        return a == b or (a != a and b != b)  # NaN equals NaN here
+
+    for e in entries:
+        want = (
+            spark.read.parquet(e["path"])
+            .agg(F.count(F.lit(1)), F.min("id"), F.max("id"))
+            .first()
+        )
+        assert e["rows"] == want[0]
+        assert same(e["lo"], want[1]) and same(e["hi"], want[2]), (e, want)
+
+
+def test_rewrite_removing_last_row_drops_the_file(store, movie_model):
+    store.create_one(movie_model, RECORD)
+    store.create_one(movie_model, dict(RECORD, id=2))
+    store.delete_one(movie_model, "1")
+    files = store._current_manifest(movie_model)["files"]
+    assert [(f["lo"], f["hi"], f["rows"]) for f in files] == [(2, 2, 1)]
+
+
+def test_record_types_round_trip(spark, store, tmp_path):
+    """Arrow-built record frames keep every type exact: a null Integer
+    stays None (not NaN), an Integer above 2^53 keeps every digit, and
+    string arrays (empty ones too), Booleans and Floats come back as
+    written, from ParquetStore and JsonFileStore alike."""
+    from gus_spark.storage.json_store import JsonFileStore
+
+    model = _model(
+        "sample",
+        {
+            "id": "Integer",
+            "count": "Integer",
+            "tags": ["String"],
+            "flag": "Boolean",
+            "score": "Float",
+        },
+    )
+    records = [
+        {"id": 1, "count": None, "tags": [], "flag": False, "score": 0.1},
+        {"id": 2**53 + 1, "count": 2**62 + 3, "tags": ["a", "b"],
+         "flag": True, "score": -2.5},
+    ]
+    store.create_many(model, records[:1])
+    store.create_one(model, records[1])
+    json_store = JsonFileStore(spark, str(tmp_path / "data.json.gus"))
+    for rec in records:
+        assert store.read_one(model, str(rec["id"])) == rec
+        json_store.create_one(model, rec)
+    rows = json_store.read_df(model).orderBy("id").collect()
+    assert [r.asDict() for r in rows] == records
+    store.update_one(model, "1", {"count": 2**53 + 1})
+    assert store.read_one(model, "1")["count"] == 2**53 + 1
+
+
+def test_apply_changes_rejects_unvalidated_record(store, movie_model):
+    """apply_changes trusts callers to pass parse_record output; a
+    string in an Integer attr still fails loudly, before any commit."""
+    store.create_one(movie_model, RECORD)
+    before = store.history(movie_model)
+    with pytest.raises((TypeError, ValueError)):
+        store.apply_changes(
+            movie_model, upserts=[dict(RECORD, id=2, year="1999")]
+        )
+    assert store.history(movie_model) == before
+    assert store.count(movie_model) == 1
